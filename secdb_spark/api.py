@@ -15,11 +15,15 @@ DataFrame-out functions a user points at THEIR columns:
     asof    = api.asof_join(trades, quotes, on="sym",
                             left_ts="t", right_ts="t")
 
-Every function is a thin column-renaming adapter over the operator
-kernels certified by the DuckDB differential suite (the registry entry
-named in each docstring), so behavior and scale properties are the
-tested ones: no all-pairs joins, no single-partition windows above the
-gates, broadcast where model-sized.
+Each function names its registry twin in its docstring.  Bindings share
+ONE kernel with the registry, so the DuckDB differential suite certifies
+both: near_dup_pairs, jaccard_pairs, cosine_topk and cooccur_pairs adapt
+an operator kernel; graph_pagerank, events_sessionize and funnel_events
+call pagerank, sessionize and funnel; the global-order functions share
+operators._global_order.  The rest re-implement their twin's algebra on
+caller columns, held to it by tests/test_api_twins.py.  Either way the
+scale properties are the tested ones: no all-pairs joins, no
+single-partition windows above the gates, broadcast where model-sized.
 
 Reserved column prefix: names starting with ``__secdb_`` are reserved
 for internal helper columns that functions here may join onto the
@@ -377,48 +381,22 @@ def near_dup_pairs(
     n_hashes: int = 16,
     n_bands: int = 4,
 ) -> DataFrame:
-    """dedup_near generalized: MinHash+LSH candidates verified with exact
-    token-set Jaccard >= threshold (the open-vocab hashed-set kernel —
-    precision 1 by construction; recall is the LSH S-curve).  Returns
-    (id_a, id_b, jaccard)."""
-    cand = lsh_candidate_pairs(
-        minhash_signatures(df, id_col, text_col, n_hashes), id_col, n_bands
-    )
-    hsets = df.select(
-        F.col(id_col),
-        F.sort_array(
-            F.transform(token_set(text_col), lambda t: F.xxhash64(t))
-        ).alias("hset"),
-    ).withColumn("n", F.size("hset"))
-    # pinned: hsets feeds both verify sides (§50 recompute class).
-    hsets = pin(hsets)
-    sa = hsets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("hset").alias("set_a"),
-        F.col("n").alias("na"),
-    )
-    sb = hsets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("hset").alias("set_b"),
-        F.col("n").alias("nb"),
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(
-            F.least("na", "nb") >= F.lit(threshold) * F.greatest("na", "nb")
-        )
-        .withColumn("n_common", inter)
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    """dedup_near's kernel (llm_pipeline._dedup_near_pairs) on any
+    (id, text): MinHash+LSH candidates from the first-matching-band join,
+    verified with exact token-set Jaccard >= threshold — precision 1 by
+    construction; recall is the LSH S-curve.  Size and dictionary are
+    unknown without a Spark job, so the kernel's distributed branches
+    run.  NULL texts pair with nothing.  Returns (id_a, id_b, jaccard),
+    id_a < id_b."""
+    from .operators.llm_pipeline import _dedup_near_pairs
+
+    docs = df.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).filter(F.col("text").isNotNull())
+    return _dedup_near_pairs(
+        docs, None, None, threshold, n_hashes, n_bands
+    ).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "jaccard"
     )
 
 
@@ -676,7 +654,7 @@ def sessionize(
     gap_minutes: int = 30,
     out_col: str = "session_id",
 ) -> DataFrame:
-    """events_sessionize's gap rule on any (user, timestamp): adds a
+    """The gap rule events_sessionize calls, on any (user, timestamp): adds a
     per-user integer session id that increments after gap_minutes of
     inactivity.  One shuffle on the user key.  TIMESTAMP_NTZ columns
     (parquet's timezone-naive default) are accepted — the gap only ever
@@ -709,8 +687,8 @@ def funnel(
     stages: list[str],
     tie_col: str | None = None,
 ) -> DataFrame:
-    """Ordered-funnel counts on ANY event table (funnel_events' algebra
-    with the stage list parameterized): returns one row per funnel
+    """Ordered-funnel counts on ANY event table (the kernel funnel_events
+    calls, with the stage list parameterized): returns one row per funnel
     prefix — (stage, n_users) where stage is 'a', 'a>b', 'a>b>c', … and
     n_users counts users who reached that stage IN ORDER (each stage
     strictly after a row completing the previous prefix).
@@ -2972,56 +2950,92 @@ def pagerank(
     iters: int = 9,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over ANY edge list (graph_pagerank's
-    algebra with iterations/damping parameterized): per-iteration
+    """Fixed-iteration PageRank over ANY edge list — the kernel behind
+    graph_pagerank, with iterations/damping parameterized: per-iteration
     neighbor contributions pr/deg quantize to DECIMAL(38,18) before
     summation (shuffle-order-free), the closing (1-d)/n + d*s is one
-    IEEE expression.  Returns (node, pr) for EVERY node appearing in
-    the edge list (src or dst); n is that full node count.  On directed
-    input a node with no in-edges holds the teleport floor (1-d)/n each
-    iteration while still contributing pr/deg along its out-edges.
-    Dangling mass (nodes with no OUT-edges) is not redistributed — pass
-    a symmetrized edge list (as the kernel's undirected graph does)
-    when you need a proper stochastic walk.
+    IEEE expression, 1-d taken in decimal (0.15 for 0.85, not binary
+    0.15000000000000002).  Returns (node, pr) for EVERY node appearing
+    in the edge list (src or dst); n is that full node count.  On
+    directed input a node with no in-edges holds the teleport floor
+    (1-d)/n each iteration while still contributing pr/deg along its
+    out-edges.  Dangling mass (nodes with no OUT-edges) is not
+    redistributed — pass a symmetrized edge list (as graph_pagerank
+    does) when you need a proper stochastic walk.
 
-    Scale shape: edges co-partition by src across all iterations (one
-    hash join+agg per round, plus one left join back to the pinned node
-    universe so rank never silently loses source-only nodes); the rank
-    vector never leaves the cluster — only the scalar node count
-    collects once."""
+    Scale shape: the distinct edge list, hash-partitioned on the source,
+    checkpoints ONCE; each round is one aggregate over the
+    contributions.  Only the node count is collected; at or below
+    PR_BROADCAST_NODES the degree frame and each round's rank vector
+    broadcast, so the edges never shuffle after the checkpoint; above
+    it the joins shuffle and the rank vector never leaves the cluster."""
+    from decimal import Decimal
+
+    from .operators.warehouse_extras4 import PR_BROADCAST_NODES
+
     if iters < 1 or not 0 < damping < 1:
         raise ValueError("iters >= 1 and damping in (0, 1)")
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    ).distinct()
-    deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_d"))
-    ed = e.join(deg, "_src").localCheckpoint()
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .union(e.select(F.col("_dst").alias("node")))
+    teleport = float(Decimal(1) - Decimal(str(damping)))
+    # hash-partitioned on the source with an explicit width: AQE would
+    # coalesce a model-sized distinct to ~1 partition, running every
+    # round as one task
+    e = (
+        edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
+        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "_src")
         .distinct()
         .localCheckpoint()
     )
-    n = nodes.count()
-    r = nodes.withColumn("pr", F.lit(1.0) / F.lit(n))
+    # every endpoint with its out-degree, flagged when an edge can carry
+    # rank into it (equality never matches NULL: a NULL endpoint counts
+    # in n and in its partner's degree but receives nothing)
+    fed = F.col("_src").isNotNull() & F.col("_dst").isNotNull()
+    ends = F.array(
+        F.struct(F.col("_src").alias("node"), F.lit(1).alias("_o"),
+                 F.lit(False).alias("_in")),
+        F.struct(F.col("_dst").alias("node"), F.lit(0).alias("_o"),
+                 fed.alias("_in")),
+    )
+    nodes = (
+        e.select(F.inline(ends))
+        .groupBy("node")
+        .agg(F.sum("_o").alias("_d"), F.max("_in").alias("_in"))
+        .localCheckpoint()
+    )
+    n, n_unfed = nodes.agg(
+        F.count(F.lit(1)), F.count(F.when(~F.col("_in"), 1))
+    ).first()
+    small = n <= PR_BROADCAST_NODES
+
+    def gated(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if small else df
+
+    deg = nodes.filter(F.col("_d") > 0).select(
+        F.col("node").alias("_src"), "_d"
+    )
+    ed = (
+        e.join(gated(deg), "_src")
+        .filter(F.col("_dst").isNotNull())
+        .localCheckpoint()
+    )
+    # nodes no edge feeds receive no contribution row; a zero row each
+    # keeps them at the teleport floor (a symmetrized list has none, and
+    # skips the union)
+    unfed = nodes.filter(~F.col("_in")).select(
+        F.col("node").alias("_dst"), F.lit(0).cast("decimal(38,18)").alias("_c")
+    )
+    r = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("pr"))
     for _ in range(iters):
-        contrib = ed.join(r, ed._src == r.node).select(
-            F.col("_dst"),
+        contrib = ed.join(gated(r), ed._src == r.node).select(
+            "_dst",
             (F.col("pr") / F.col("_d")).cast("decimal(38,18)").alias("_c"),
         )
-        recv = contrib.groupBy(F.col("_dst").alias("node")).agg(
-            F.sum("_c").cast("double").alias("_s")
-        )
-        # left join back to the FULL node universe: on directed graphs a
-        # source-only node receives no contribution but must keep the
-        # teleport floor and keep contributing (ADVICE r9: the groupBy
-        # output alone silently dropped it after iteration 1)
-        r = nodes.join(recv, "node", "left").select(
-            "node",
+        if n_unfed:
+            contrib = contrib.union(unfed)
+        r = contrib.groupBy(F.col("_dst").alias("node")).agg(
             (
-                F.lit(1.0 - damping) / F.lit(n)
-                + F.lit(damping) * F.coalesce("_s", F.lit(0.0))
-            ).alias("pr"),
+                F.lit(teleport) / F.lit(n)
+                + F.lit(damping) * F.sum("_c").cast("double")
+            ).alias("pr")
         )
     return r
 

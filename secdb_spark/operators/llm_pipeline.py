@@ -662,22 +662,38 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # warehouse scale the corpus has many row groups / files and no
     # shuffle is added.
     d = _spread_docs(spark, sf_dir, d)
-    return _dedup_near_pairs(spark, sf_dir, d)
+    return _dedup_near_pairs(
+        d, table_rows(sf_dir, "documents"), _mask_vocab(spark, sf_dir)
+    )
 
 
 def _dedup_near_pairs(
-    spark: SparkSession, sf_dir: str, d: DataFrame
+    d: DataFrame,
+    n_docs: int | None,
+    vocab: list[str] | None,
+    threshold: float = JACCARD_THRESHOLD,
+    n_hashes: int = N_MINHASH,
+    n_bands: int = N_BANDS,
 ) -> DataFrame:
-    """dedup_near's pipeline over an arbitrary (doc_id, text) SUBSET of
-    the sf_dir corpus (r14): dedup_clusters runs it on one REPRESENTATIVE
-    per identical-token-set group — identical sets share every signature,
-    band key and verify outcome, so the representative pair list IS the
-    contracted group-edge list (see dedup_clusters).  The dictionary and
-    broadcast gates key on the FULL corpus via sf_dir (upper bounds for
-    any subset)."""
+    """The one near-dup kernel behind dedup_near, dedup_clusters and
+    api.near_dup_pairs, over any (doc_id, text) frame (dedup_clusters
+    passes one representative per identical-token-set group).  The
+    gates are inputs the caller reads without a Spark job: `n_docs`
+    bounds the row count (broadcast gate), `vocab` is the COMPLETE
+    sorted dictionary (bitmask verify); None selects the distributed
+    branch.  Slot j hashes with the sha256 digest salted
+    chr(65 + j // 8) + ':' (slice j % 8).  Returns (doc_a, doc_b,
+    jaccard), doc_a < doc_b, each pair once."""
+    if n_hashes <= 0 or n_bands <= 0 or n_hashes % n_bands != 0:
+        # a zero-width or ragged band split is an all-pairs join or a
+        # silent recall loss
+        raise ValueError(
+            f"n_bands={n_bands} must evenly divide n_hashes={n_hashes}"
+        )
     toks = d.select("doc_id", F.explode(_tokens()).alias("tok"))
-    vocab = _mask_vocab(spark, sf_dir)
-    rows_per_band = N_MINHASH // N_BANDS
+    rows_per_band = n_hashes // n_bands
+    n_digests = (n_hashes + 7) // 8
+    bcast = n_docs is not None and n_docs <= MASK_BROADCAST_DOCS
 
     # Band keys as LONGs (xxhash64 of the 4 slice values): primitive join
     # keys beat ~36-char strings, and a 2^-64 key collision can only ADD
@@ -691,7 +707,7 @@ def _dedup_near_pairs(
                     for r in range(rows_per_band)
                 ]
             ).alias(f"band{band}")
-            for band in range(N_BANDS)
+            for band in range(n_bands)
         ]
 
     def _band_pairs(sigmask: DataFrame, bcast: bool) -> DataFrame:
@@ -719,7 +735,7 @@ def _dedup_near_pairs(
         if bcast:
             y = F.broadcast(y)
         band_joins = []
-        for b in range(N_BANDS):
+        for b in range(n_bands):
             cond = (F.col(f"x.band{b}") == F.col(f"y.band{b}")) & (
                 F.col("x.doc_id") < F.col("y.doc_id")
             )
@@ -741,7 +757,7 @@ def _dedup_near_pairs(
         return (
             joined.filter(
                 F.least("na", "nb")
-                >= F.lit(JACCARD_THRESHOLD) * F.greatest("na", "nb")
+                >= F.lit(threshold) * F.greatest("na", "nb")
             )
             .withColumn("n_common", inter_sz)
             .select(
@@ -752,7 +768,7 @@ def _dedup_near_pairs(
                     / (F.col("na") + F.col("nb") - F.col("n_common"))
                 ).alias("jaccard"),
             )
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+            .filter(F.col("jaccard") >= threshold)
         )
 
     if vocab is not None:
@@ -789,11 +805,15 @@ def _dedup_near_pairs(
         n_words = (n_vocab + 63) // 64
 
         def _slices_of(tok: str) -> list[int]:
-            da = hashlib.sha256(b"A:" + tok.encode("utf-8")).hexdigest()
-            db = hashlib.sha256(b"B:" + tok.encode("utf-8")).hexdigest()
+            digs = [
+                hashlib.sha256(
+                    f"{chr(65 + k)}:{tok}".encode("utf-8")
+                ).hexdigest()
+                for k in range(n_digests)
+            ]
             return [
-                int((da if j < 8 else db)[(j % 8) * 8 : (j % 8) * 8 + 8], 16)
-                for j in range(N_MINHASH)
+                int(digs[j // 8][(j % 8) * 8 : (j % 8) * 8 + 8], 16)
+                for j in range(n_hashes)
             ]
 
         slices = [_slices_of(t) for t in vocab]
@@ -812,7 +832,7 @@ def _dedup_near_pairs(
                 + ", ".join(f"{slices[i][j]}L" for i in range(n_vocab))
                 + ")"
             )
-            for j in range(N_MINHASH)
+            for j in range(n_hashes)
         ]
         # idx is never NULL: _mask_vocab only returns COMPLETE
         # dictionaries, so every token hits the map (the join this
@@ -823,7 +843,7 @@ def _dedup_near_pairs(
                 F.min(
                     F.element_at(slice_arrs[j], F.col("idx") + 1)
                 ).alias(f"h{j}")
-                for j in range(N_MINHASH)
+                for j in range(n_hashes)
             ],
             *[
                 F.bit_or(
@@ -842,8 +862,7 @@ def _dedup_near_pairs(
             *[f"m{w}" for w in range(n_words)],
             "n",
         ).localCheckpoint(eager=True)
-        in_gate = table_rows(sf_dir, "documents") <= MASK_BROADCAST_DOCS
-        pairs_raw = _band_pairs(sigmask, bcast=in_gate)
+        pairs_raw = _band_pairs(sigmask, bcast=bcast)
         ma = sigmask.select(
             F.col("doc_id").alias("doc_a"),
             *[F.col(f"m{w}").alias(f"a{w}") for w in range(n_words)],
@@ -861,7 +880,7 @@ def _dedup_near_pairs(
             ],
             F.lit(0),
         )
-        if in_gate:
+        if bcast:
             # VERIFY-FIRST kernel: the per-doc masks are tiny (n_words
             # longs + a count), so broadcast them onto the band-join
             # pairs — the whole candidate stream (already duplicate-free
@@ -892,8 +911,12 @@ def _dedup_near_pairs(
         F.transform(
             _tokens(),
             lambda t: F.struct(
-                F.sha2(F.concat(F.lit("A:"), t), 256).alias("da"),
-                F.sha2(F.concat(F.lit("B:"), t), 256).alias("db"),
+                *[
+                    F.sha2(
+                        F.concat(F.lit(f"{chr(65 + k)}:"), t), 256
+                    ).alias(f"d{chr(97 + k)}")
+                    for k in range(n_digests)
+                ],
                 F.xxhash64(t).alias("hx"),
             ),
         ).alias("dg"),
@@ -905,11 +928,11 @@ def _dedup_near_pairs(
                 F.transform(
                     "dg",
                     lambda x: F.substring(
-                        x["da"] if j < 8 else x["db"], (j % 8) * 8 + 1, 8
+                        x[f"d{chr(97 + j // 8)}"], (j % 8) * 8 + 1, 8
                     ),
                 )
             ).alias(f"h{j}")
-            for j in range(N_MINHASH)
+            for j in range(n_hashes)
         ],
         F.sort_array(F.transform("dg", lambda x: x["hx"])).alias("hset"),
         F.size("dg").alias("n"),
@@ -917,9 +940,7 @@ def _dedup_near_pairs(
     sigmask = per_doc.select(
         "doc_id", *_band_cols(), "hset", "n"
     ).localCheckpoint(eager=True)
-    pairs_raw = _band_pairs(
-        sigmask, bcast=table_rows(sf_dir, "documents") <= MASK_BROADCAST_DOCS
-    )
+    pairs_raw = _band_pairs(sigmask, bcast=bcast)
     sa = sigmask.select(
         F.col("doc_id").alias("doc_a"),
         F.col("hset").alias("set_a"),
@@ -1902,7 +1923,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_ids = dmap.filter(F.col("doc_id") == F.col("gid")).select("doc_id")
     reps = table(spark, sf_dir, "documents").join(rep_ids, "doc_id", "semi")
     gpairs = (
-        _dedup_near_pairs(spark, sf_dir, _spread_docs(spark, sf_dir, reps))
+        _dedup_near_pairs(
+            _spread_docs(spark, sf_dir, reps),
+            table_rows(sf_dir, "documents"),
+            _mask_vocab(spark, sf_dir),
+        )
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )

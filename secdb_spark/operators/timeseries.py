@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import table
 from ..registry import register
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches stream_session
+SESSION_GAP_MIN = 30  # matches stream_session
 
 
 @register(
@@ -55,24 +55,19 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches stream_session
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch 30-min-gap sessionization — the historical-store counterpart
-    of stream_session, expressed as window algebra: flag a session break
+    of stream_session: api.sessionize's gap rule (flag a session break
     where the gap to the previous event exceeds the threshold, running-sum
-    the flags into a per-user session sequence, then aggregate per session.
+    the flags into a per-user session sequence) bound to the events
+    table, then one aggregate per session.
 
     Both windows and the final groupBy hash-partition on user_id, so the
-    whole pipeline is one Exchange + one sort; ts is projected to epoch-µs
-    once so the lag/running-sum operate on plain longs."""
-    ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.col("us") - F.lag("us").over(w)
-    flagged = ev.withColumn(
-        "new_sess",
-        F.when(gap.isNull() | (gap > SESSION_GAP_US), F.lit(1)).otherwise(F.lit(0)),
-    )
-    sess = flagged.withColumn(
-        "session_seq", F.sum("new_sess").over(run).cast("long")
-    )
+    whole pipeline is one Exchange + one sort.  Equal-timestamp ties need
+    no event_id order here: only the first row of a tie can open a
+    session, and every row of the tie gets the same running sum."""
+    from ..api import sessionize
+
+    ev = table(spark, sf_dir, "events")
+    sess = sessionize(ev, "user_id", "ts", SESSION_GAP_MIN, "session_seq")
     return sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -190,52 +185,18 @@ def rollup_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-funnel analysis (view -> click -> purchase) in ONE pass:
-    instead of per-stage self-joins (k-1 joins, each a shuffle), a single
-    per-user ordered window computes 'seen stage k strictly before this
-    row' flags, and one aggregation counts users reaching each stage IN
-    ORDER.  All windows and the final groupBy share the user_id
-    partitioning — one Exchange total, the same discipline as
-    events_sessionize.  At 100 TB the state per user is k bits, not an
-    event list."""
-    ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    before = (
-        Window.partitionBy("user_id")
-        .orderBy("us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    is_view = F.when(F.col("event_type") == "view", 1).otherwise(0)
-    s1 = ev.withColumn("seen_view", F.max(is_view).over(before))
-    is_cav = F.when(
-        (F.col("event_type") == "click") & (F.col("seen_view") == 1), 1
-    ).otherwise(0)
-    s2 = s1.withColumn("cav", is_cav).withColumn(
-        "seen_click_after", F.max("cav").over(before)
-    )
-    per_user = s2.groupBy("user_id").agg(
-        F.max(is_view).alias("f1"),
-        F.max("cav").alias("f2"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("seen_click_after") == 1),
-                1,
-            ).otherwise(0)
-        ).alias("f3"),
-    )
-    totals = per_user.agg(
-        F.sum("f1").cast("long").alias("view"),
-        F.sum("f2").cast("long").alias("vc"),
-        F.sum("f3").cast("long").alias("vcp"),
-    )
-    return totals.select(
-        F.explode(
-            F.map_from_arrays(
-                F.array(
-                    F.lit("view"), F.lit("view>click"), F.lit("view>click>purchase")
-                ),
-                F.array("view", "vc", "vcp"),
-            )
-        ).alias("stage", "n_users")
+    api.funnel bound to the events table.  Instead of per-stage
+    self-joins (k-1 joins, each a shuffle), per-user ordered windows
+    compute 'seen stage k strictly before this row' flags, and one
+    aggregation counts users reaching each stage IN ORDER.  All windows
+    and the final groupBy share the user_id partitioning — one Exchange
+    total, the same discipline as events_sessionize.  At 100 TB the
+    state per user is k bits, not an event list."""
+    from ..api import funnel
+
+    return funnel(
+        table(spark, sf_dir, "events"), "user_id", "ts", "event_type",
+        ["view", "click", "purchase"], tie_col="event_id",
     )
 
 

@@ -184,11 +184,15 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its pin (the un-hinted plan sort-merge-joined the edge list by a
     # then by b every round).  Join strategy never changes results;
     # above the gate the distributed shape is unchanged.
-    # Gate proxy: the live set is bounded by the node count, itself
-    # bounded by |customers| + |suppliers| < the orders footer row
-    # count — a driver-side footer read, never a Spark job.
+    # Gate bound: the live set is bounded by the node count, itself
+    # bounded by |customers| + |suppliers| (every node is a customer or
+    # a supplier) — parquet footer reads, never a Spark job.
     from .warehouse_extras4 import PR_BROADCAST_NODES
 
+    small = (
+        table_rows(sf_dir, "customer") + table_rows(sf_dir, "supplier")
+        <= PR_BROADCAST_NODES
+    )
     lives = []
     for i in range(1, KCORE_ROUNDS + 1):
         live = pin(
@@ -197,11 +201,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_d") >= KCORE_K)
             .select(F.col("a").alias("node"))
         )
-        bl = (
-            F.broadcast(live)
-            if table_rows(sf_dir, "orders") <= PR_BROADCAST_NODES
-            else live
-        )
+        bl = F.broadcast(live) if small else live
         u = pin(
             u.join(bl.select(F.col("node").alias("a")), "a")
             .join(bl.select(F.col("node").alias("b")), "b")

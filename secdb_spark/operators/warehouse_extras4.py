@@ -171,10 +171,11 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 PR_ITERS = 3
 PR_DAMP = 0.85
 PR_TOPK = 20
-#: Node-count bound for broadcasting the degree frame and the per-round
-#: rank vector (model-sized: 5M nodes x (long, double) ~ 80 MB framed —
-#: comfortably under the broadcast cap).  Above it the joins keep the
-#: distributed shuffle shape and per-round driver traffic stays zero.
+#: Node-count bound for api.pagerank's broadcast of the degree frame and
+#: the per-round rank vector (model-sized: 5M nodes x (long, double) ~
+#: 80 MB framed — comfortably under the broadcast cap).  Above it the
+#: joins keep the distributed shuffle shape and no round collects
+#: anything.
 PR_BROADCAST_NODES = 5_000_000
 _DEC18 = "DECIMAL(38,18)"
 
@@ -213,74 +214,32 @@ def _pr_oracle() -> str:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration ({PR_ITERS} rounds, d=0.85) PageRank over the
     undirected customer<->supplier trade graph (distinct order-lineitem
-    pairs), certified EXACTLY: per-iteration neighbor contributions
-    pr/deg are quantized to DECIMAL(38,18) before summation so the
-    shuffle-order-dependent float sum becomes exact, and the closing
-    (1-d)/n + d*s is a single identical IEEE expression tree in both
-    engines; final ranks are 1e9-quantized for the top-k ordering.
-    Undirected edges mean every node has out-degree >= 1, so there is no
-    dangling-mass term to redistribute.
+    pairs), certified EXACTLY: api.pagerank quantizes per-iteration
+    neighbor contributions pr/deg to DECIMAL(38,18) before summation so
+    the shuffle-order-dependent float sum becomes exact, and closes each
+    round with the oracle's 0.15/n + 0.85*s as a single identical IEEE
+    expression tree; final ranks are 1e9-quantized for the top-k
+    ordering.  Undirected edges mean every node has out-degree >= 1, so
+    there is no dangling-mass term to redistribute.
 
-    Scale shape: edges co-partition by src across all iterations (one
-    hash-partitioned join+agg per round, AQE-coalesced); per-round driver
-    traffic is zero (the rank vector never leaves the cluster — only the
-    scalar node count is collected once).  At 10^9 edges each iteration
-    is one shuffle of model-sized (node, rank) pairs; the fixed iteration
-    count bounds total cost, the standard production trade-off vs
-    convergence-tested PageRank."""
+    This op is the long-id edge list, the api.pagerank call (whose
+    docstring has the scale shape) and the top-k projection.  Node ids
+    are LONGs through the iteration (2*custkey / 2*suppkey+1, an exact
+    bijection with the 'c…'/'s…' strings, rebuilt only in the final
+    projection BEFORE the tie-break sort)."""
+    from ..api import pagerank
+
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # r13 (guide §2.3 narrower types + multi-consumer pins): the whole
-    # iteration runs on LONG node ids (2*custkey / 2*suppkey+1 — an
-    # exact bijection with the 'c…'/'s…' strings, reconstructed only in
-    # the final rank-vector-sized projection BEFORE the tie-break sort,
-    # so the certified ordering and every DEC18 sum are unchanged); the
-    # distinct shuffles two ints, not concatenated strings.  deg is
-    # pinned — un-pinned, the `n = deg.count()` action re-ran the whole
-    # orders⋈lineitem distinct subtree the ed checkpoint had just
-    # computed (~2.6 s at sf0.1).
-    # r14 (guide §2.4/§3.1): the r13 shape checkpointed ed =
-    # edges⋈deg, which RECOMPUTED the orders⋈lineitem distinct the deg
-    # pin had just materialized (~2 s at sf0.1), and each iteration
-    # sort-merge-joined the 1.17M-row edge list against the model-sized
-    # rank vector (a full edge shuffle + sort per round).  Now the
-    # distinct edge set checkpoints ONCE and everything derives from it,
-    # and when the node count is model-sized the degree frame and the
-    # per-round rank vector broadcast — the edge list never shuffles
-    # after its checkpoint.  Above the gate (web-scale graphs where the
-    # rank vector must stay distributed) the joins keep the r13
-    # shuffle-join shape and per-round driver traffic stays zero.
-    # Values are unchanged either way: contributions are DECIMAL(38,18)
-    # (order-exact sums), and join strategy never changes results.
-    e0 = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey").cast("long") * 2).alias("a"),
-            (F.col("l_suppkey").cast("long") * 2 + 1).alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
+    # both directions of each trade from ONE pass over the join (a union
+    # of two selects would run the join twice)
+    a = F.col("o_custkey").cast("long") * 2
+    b = F.col("l_suppkey").cast("long") * 2 + 1
+    edges = o.join(li, o.o_orderkey == li.l_orderkey).select(
+        F.inline(F.array(F.struct(a.alias("s"), b.alias("d")),
+                         F.struct(b.alias("s"), a.alias("d"))))
     )
-    edges = e0.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        e0.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    deg = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
-    n = deg.count()
-    small = n <= PR_BROADCAST_NODES
-    ed = edges.join(F.broadcast(deg) if small else deg, "src").localCheckpoint()
-    r = deg.select(F.col("src").alias("node"), (F.lit(1.0) / F.lit(n)).alias("pr"))
-    for _ in range(PR_ITERS):
-        contrib = ed.join(
-            F.broadcast(r) if small else r, ed.src == r.node
-        ).select(
-            F.col("dst"), (F.col("pr") / F.col("d")).cast(_DEC18).alias("c")
-        )
-        r = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(0.15) / F.lit(n)
-                + F.lit(PR_DAMP) * F.sum("c").cast("double")
-            ).alias("pr")
-        )
+    r = pagerank(edges, "s", "d", iters=PR_ITERS, damping=PR_DAMP)
     node_str = F.when(
         F.col("node") % 2 == 0,
         F.concat(F.lit("c"), F.shiftright("node", 1).cast("string")),

@@ -131,6 +131,7 @@ _ORACLE_CHANGED: dict[str, int] = {"join_inner": 6, "dedup_url_canonical": 13}
 #   r12-ADVICE correctness fixes committed in fd2a6b6 after
 #   CORRECTNESS_r12 was captured (baseline_includes_partial_round).
 #   round 14 — this round's restructures, appended as they land.
+#   round 15 — registry ops rebound onto the api kernels they share.
 # Remove an entry once a CORRECTNESS_r*.json from AFTER the change holds
 # a green row (tests/test_registry.py pins the bookkeeping).
 _IMPL_CHANGED: dict[str, int] = {
@@ -143,7 +144,7 @@ _IMPL_CHANGED: dict[str, int] = {
     "dedup_clusters_exact": 14, "dedup_simhash": 14, "simhash_pairs": 14,
     "corpus_dup_ngram_share": 13, "lsh_eval": 14,
     "ivf_eval": 14,  # re-restructured r14
-    "graph_pagerank": 14,  # re-restructured r14
+    "graph_pagerank": 15,  # re-restructured r14; calls api.pagerank r15
     "ann_pq_adc_topk": 13,
     "agg_percentile_disc": 13, "spearman_corr": 13, "stat_levene": 13,
     "source_length_ks": 13, "src_jsonl": 13,
@@ -172,6 +173,8 @@ _IMPL_CHANGED: dict[str, int] = {
     "data_profile": 14,
     # r14: scan-spread gate on the two row-group-bound tokenize passes
     "text_char_trigram_lm": 14,
+    # r15: bound to api.sessionize / api.funnel
+    "events_sessionize": 15, "funnel_events": 15,
 }
 
 

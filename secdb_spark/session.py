@@ -10,8 +10,14 @@ local assumptions beyond this factory.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: The directory holding the secdb_spark package.  Python workers do not
+#: inherit this process's sys.path: a UDF that references engine code fails
+#: to unpickle (ModuleNotFoundError) unless the workers' path has this.
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 # Configs that are *required for correctness* on the driver's testdata and
 # must therefore also be applied at runtime to sessions we did not build
@@ -37,12 +43,19 @@ RUNTIME_CONFS = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply required dynamic configs to an existing session (driver-owned)."""
+    """Apply required dynamic configs to an existing session (ours or a
+    caller's), and add PACKAGE_ROOT to the PYTHONPATH of its worker
+    environment (sc.environment, merged with any
+    spark.executorEnv.PYTHONPATH)."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — builder path already set it
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_ROOT])
     return spark
 
 

@@ -35,7 +35,9 @@ BASELINE_Q = {
 }
 
 
-def cpu_stamp() -> str:
+def cpu_stamp(cpus) -> str:
+    """Host stamp: `cpus` is the bench session's live defaultParallelism
+    (bench.py prints it), the vCPU count is this process's nproc."""
     t0 = time.time()
     hashlib.sha256(b"\0" * (200 * 1024 * 1024)).hexdigest()
     t_sha = time.time() - t0
@@ -46,7 +48,8 @@ def cpu_stamp() -> str:
     _ = a @ a
     t_mm = time.time() - t0
     return (
-        f"local[32], 32 vCPU; sha256 200MB {t_sha:.3f}s, "
+        f"local[{cpus}], {len(os.sched_getaffinity(0))} vCPU; "
+        f"sha256 200MB {t_sha:.3f}s, "
         f"numpy 2000x2000 matmul {t_mm:.3f}s "
         "(single-session microbench for cross-round host comparison)"
     )
@@ -72,9 +75,16 @@ def main() -> int:
             env=env,
             cwd="/root/repo",
         )
-        line = [
+        lines = [
             l for l in out.stdout.splitlines() if l.startswith('{"metric"')
-        ][-1]
+        ]
+        if out.returncode != 0 or not lines:
+            sys.stderr.write(out.stderr)
+            raise SystemExit(
+                f"run {i + 1}/{n_runs}: bench.py exited {out.returncode} "
+                f"with {len(lines)} metric line(s); its stderr is above"
+            )
+        line = lines[-1]
         payload = json.loads(line)
         payload["loadavg_before"] = load
         runs.append(payload)
@@ -110,7 +120,7 @@ def main() -> int:
         "cpus": best.get("cpus"),
         "vs_baseline_headline_run": vs,
         "geomean_vs_baseline": geo,
-        "host": cpu_stamp(),
+        "host": cpu_stamp(best.get("cpus")),
         "date": time.strftime("%Y-%m-%d"),
     }
     path = f"/root/repo/BENCH_IDLE_r{rnd}.json"
