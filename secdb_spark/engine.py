@@ -37,7 +37,12 @@ from .session import apply_runtime_confs, get_spark
 
 
 class Engine:
-    """SQL + DataFrame + operator access over one testdata/warehouse dir."""
+    """SQL + DataFrame + operator access over one testdata/warehouse dir.
+
+    A caller-supplied `spark` gets the RUNTIME_CONFS but keeps its own
+    generated-code cache size (a static conf that get_spark sets to hold
+    the registry's working set). Answers do not change; repeat passes over
+    many operators may be slower, as Spark recompiles evicted classes."""
 
     def __init__(
         self, sf_dir: str = DEFAULT_SF_DIR, spark: SparkSession | None = None

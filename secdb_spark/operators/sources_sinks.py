@@ -807,6 +807,12 @@ def _xbrl_metrics_oracle() -> str:
 
 @register("xbrl_metrics", oracle=_xbrl_metrics_oracle())
 def xbrl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Standardized per-filing metrics over the superseded facts view
+    (see _metrics_of)."""
+    return _metrics_of(spark, _xbrl_supersede_facts(spark, sf_dir))
+
+
+def _metrics_of(spark: SparkSession, superseded: DataFrame) -> DataFrame:
     """Standardized per-filing metrics — the reference's core domain output
     (SURVEY §1.1 layer 2: "a standardized subset of metrics per filing
     (revenue, net income, assets) to make cross-company queries
@@ -818,9 +824,7 @@ def xbrl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: facts partition by accession; the pivot is a groupBy(accession)
     with min() per mapped concept — one shuffle, map-side combinable."""
-    facts = _xbrl_supersede_facts(spark, sf_dir).filter(
-        F.size(F.col("dims")) == 0
-    )
+    facts = superseded.filter(F.size(F.col("dims")) == 0)
     concept_map = {
         "us-gaap:Revenues": "revenue",
         "us-gaap:NetIncomeLoss": "net_income",
@@ -955,9 +959,9 @@ def build_secdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQLite export sharded per partition; each fingerprint is a 1-row
     map-side-combinable aggregate over its read-back scan."""
     out = _tmpdir("secdb_db")
-    # pinned (r13): the parse -> supersede pipeline feeds BOTH the facts
-    # write and the entities rollup write — unpinned it re-parsed the
-    # fixture corpus once per consumer (SCALE.md §50).
+    # pinned (r13): the parse -> supersede pipeline feeds the facts write,
+    # the entities rollup and the metrics pivot — unpinned it re-parsed
+    # the fixture corpus once per consumer (SCALE.md §50).
     facts = pin(_xbrl_supersede_facts(spark, sf_dir))
     tables = {
         "facts": facts.withColumn("dims_json", F.to_json("dims")).drop("dims"),
@@ -969,7 +973,7 @@ def build_secdb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_facts"),
             )
         ),
-        "metrics": xbrl_metrics(spark, sf_dir),
+        "metrics": _metrics_of(spark, facts),
     }
     from .pipeline_extras import _hash_bucket
 
@@ -990,7 +994,9 @@ def build_secdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, df in tables.items():
         path = os.path.join(out, name)
         df.write.mode("overwrite").parquet(path)
-        back = spark.read.parquet(path)
+        # the written schema, so the read-back launches no footer
+        # schema-inference job
+        back = spark.read.schema(df.schema).parquet(path)
         manifests.append(manifest_df(name, back, _BUILD_CANON[name]))
     # SQLite export of the facts table (the reference's target store).
     # value_num exports as its canonical BIGINT string (every fixture

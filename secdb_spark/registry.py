@@ -149,7 +149,7 @@ _IMPL_CHANGED: dict[str, int] = {
     "agg_percentile_disc": 13, "spearman_corr": 13, "stat_levene": 13,
     "source_length_ks": 13, "src_jsonl": 13,
     "graph_kcore": 14,  # re-restructured r14
-    "build_secdb": 13, "abtest_cuped": 13, "agg_freq_items": 13,
+    "abtest_cuped": 13, "agg_freq_items": 13,
     "geo_dense_clusters": 13,
     # r12-ADVICE fixes (fd2a6b6) committed after CORRECTNESS_r12
     "text_chunk_sliding": 13, "scd2_apply_changes": 13,
@@ -175,6 +175,8 @@ _IMPL_CHANGED: dict[str, int] = {
     "text_char_trigram_lm": 14,
     # r15: bound to api.sessionize / api.funnel
     "events_sessionize": 15, "funnel_events": 15,
+    # r15: metrics from the pinned superseded facts; schema-given read-back
+    "build_secdb": 15,
 }
 
 

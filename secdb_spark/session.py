@@ -89,6 +89,18 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
                 "SPARK_GRAFT_WAREHOUSE", tempfile.mkdtemp(prefix="secdb_wh_")
             ),
         )
+        # Generated-code cache size. Spark's default holds 100 classes,
+        # but one headline pass (sf0.01) needs 145 and one perfbench
+        # api_secdb pass 232, so at the default every repeat pass
+        # recompiles all of them (Janino, interpreted tasks, then C1/C2
+        # again). The whole registry compiles about 5,900 distinct classes
+        # at sf0.001, and 8192 holds them: a repeat headline or api_secdb
+        # pass compiles 0 and a repeat registry pass ~130 instead of
+        # ~8,500, for about 40 MB more metaspace (SCALE.md §82).
+        # Builder-only, not in RUNTIME_CONFS: the cache is created once
+        # per JVM (a static conf), and it changes speed, never answers, so
+        # a caller-owned session may keep Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)

@@ -61,7 +61,9 @@ FROZEN_ROUND_DIV_SITES = {
     ("ml_prep.py", "ts_cross_corr"),
     ("similarity_extras.py", "events_type_overlap"),
     ("similarity_extras.py", "sim_containment"),
-    ("sources_sinks.py", "xbrl_metrics"),
+    # xbrl_metrics' kernel, certified by its oracle; build_secdb, its
+    # other caller, excludes net_margin from the manifest checksum
+    ("sources_sinks.py", "_metrics_of"),
     ("stats_extras.py", "abtest_ztest"),
     ("stats_extras.py", "conversion_rate_ci"),
     ("stats_extras2.py", "stat_mannwhitney"),
